@@ -1,0 +1,17 @@
+package perfbench
+
+object Stats {
+  /** Linear-interpolated quantile, `q` in [0, 1]. */
+  def quantile(xs: Seq[Double], q: Double): Double = {
+    require(xs.nonEmpty, "quantile of no samples")
+    val s = xs.sorted
+    val pos = q * (s.length - 1)
+    val lo = math.floor(pos).toInt
+    val hi = math.min(lo + 1, s.length - 1)
+    s(lo) + (s(hi) - s(lo)) * (pos - lo)
+  }
+
+  def median(xs: Seq[Double]): Double = quantile(xs, 0.5)
+
+  def sum(xs: Iterable[Double]): Double = xs.foldLeft(0.0)(_ + _)
+}
